@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A query that throws is reported in "errors"
@@ -9,17 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local test files are tiny; split scans finer so map-side
-      // stages use every core (cluster deployments keep the default)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.Harness.session()
     // warm the JVM (codegen pipeline, shuffle machinery) so the first
     // timed query doesn't absorb one-time startup cost
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -69,11 +58,7 @@ object Bench {
           case e: Throwable =>
             timings(name) = -1.0
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        } finally {
-          graft.pipeline.Dedup.releaseCaches()
-          graft.graphx.Analytics.releaseCaches()
-          graft.Checkpoints.releaseCaches()
-        }
+        } finally graft.tools.Harness.release()
       }
     }
     val qs = timings.map { case (k, v) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")

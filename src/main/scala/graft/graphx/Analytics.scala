@@ -123,22 +123,6 @@ object Analytics {
       .select(col("comp"), col("size"))
   }
 
-  /** [[connectedComponents]]'s DataFrame twin (same output contract:
-    * component named by its min URI, sized) over the checkpointed
-    * hash-min loop [[componentsByIdDF]] — the r17 CC-audit candidate.
-    */
-  def connectedComponentsDF(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val verts = edges.select(col("src").as("uri"))
-      .unionAll(edges.select(col("dst").as("uri"))).distinct()
-      .select(xxhash64(col("uri")).as("id"), col("uri"))
-    val comp = componentsByIdDF(spark, edges.select(
-      xxhash64(col("src")).as("src"), xxhash64(col("dst")).as("dst")))
-    verts.join(comp, Seq("id"))
-      .groupBy(col("comp"))
-      .agg(min(col("uri")).as("c"), count(lit(1)).as("size"))
-      .select(col("c").as("comp"), col("size"))
-  }
-
   /** Connected components over NUMERIC-id edges (src, dst): returns
     * (id, comp) where comp is the component's minimum vertex id
     * (GraphX's labeling — deterministic). Used by dedup cluster
@@ -166,64 +150,6 @@ object Analytics {
     val g = track(Graph.fromEdges(edgeRdd, 0))(_.unpersist(blocking = false))
     val cc = track(g.connectedComponents())(_.unpersist(blocking = false))
     spark.createDataFrame(cc.vertices).toDF("id", "comp")
-  }
-
-  /** Rounds the most recent [[componentsByIdDF]] call ran to reach
-    * its fixpoint (diagnostics for the CC audit).
-    */
-  @volatile var lastCcRounds: Int = 0
-
-  /** [[componentsById]]'s DataFrame twin: synchronous hash-min label
-    * propagation as a checkpointed DataFrame loop (the [[kCore]]
-    * idiom) instead of GraphX Pregel. Each round is ONE keyed
-    * join+groupBy (neighbor-minimum messages) and a least() merge;
-    * convergence is an exact changed-row count over the two
-    * materialized checkpoints. Rounds = graph diameter — the same
-    * bound as Pregel's hash-min, but without the RDD conversion, the
-    * Graph build, or Pregel's per-iteration caching; AQE re-plans
-    * each round as the frontier shrinks. Built for the r17 CC audit
-    * (GraphX vs DataFrame at sf1); output contract identical to
-    * [[componentsById]]: (id, comp = component's minimum vertex id).
-    */
-  def componentsByIdDF(spark: SparkSession, edges: DataFrame,
-                       maxRounds: Int = 200): DataFrame = {
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val sym = e0.unionAll(
-      e0.select(col("dst").as("src"), col("src").as("dst")))
-    var (msgEdges, _) = ckpt(sym)
-    var (comp, _) = ckpt(
-      msgEdges.select(col("src").as("id"))
-        .unionAll(msgEdges.select(col("dst").as("id")))
-        .distinct().withColumn("comp", col("id")))
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val msgs = msgEdges.join(comp, msgEdges("src") === comp("id"))
-        .groupBy(msgEdges("dst").as("id"))
-        .agg(min(col("comp")).as("m"))
-      val (next, _) = ckpt(comp.as("c")
-        .join(msgs.as("n"), Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("c.comp"), coalesce(col("n.m"), col("c.comp")))
-            .as("comp")))
-      // labels only ever DECREASE: a changed row is next < cur — the
-      // count reads two just-materialized checkpoints
-      converged = next.as("n").join(comp.as("c"), Seq("id"))
-        .filter(col("n.comp") < col("c.comp")).isEmpty
-      comp = next
-      rounds += 1
-    }
-    lastCcRounds = rounds
-    // maxRounds is a safety valve, not an output mode: hash-min labels
-    // are only correct AT the fixpoint, so exiting the loop un-converged
-    // must be an error, not a silently-truncated answer that the
-    // documented componentsById contract can't distinguish (lastCcRounds
-    // alone can't tell converged-at-max from truncated).
-    if (!converged)
-      throw new IllegalStateException(
-        s"componentsByIdDF did not converge in $maxRounds rounds " +
-          "(graph diameter exceeds maxRounds); raise maxRounds")
-    comp
   }
 
   /** Peel rounds the most recent [[kCore]] call actually ran

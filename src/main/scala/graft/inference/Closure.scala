@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   */
 object Closure {
 
-  /** Strict transitive closure of (sub, sup) edges. */
+  /** Strict transitive closure of (sub, sup) edges; throws if it has
+    * not reached its fixpoint after `maxRounds` doubling rounds.
+    */
   def transitive(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
     var cur = edges.select(col("sub"), col("sup")).distinct().localCheckpoint()
     var size = cur.count()
@@ -35,6 +37,12 @@ object Closure {
       size = nextSize
       round += 1
     }
+    // a round that still grew may have left longer paths unjoined:
+    // exiting there must fail, not return a silently partial closure
+    if (grown)
+      throw new IllegalStateException(
+        s"transitive closure did not converge in $maxRounds rounds " +
+          "(hierarchy depth exceeds 2^maxRounds); raise maxRounds")
     cur
   }
 

@@ -17,6 +17,16 @@ class InferenceSpec extends AnyFunSuite {
       ("x", "y1"), ("x", "y2"), ("y1", "z"), ("y2", "z"), ("x", "z")))
   }
 
+  test("transitive closure fails loudly at its round cap instead of returning a partial closure") {
+    val chain = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("e", "f"))
+      .toDF("sub", "sup")
+    intercept[IllegalStateException](Closure.transitive(chain, maxRounds = 1))
+    val nodes = Seq("a", "b", "c", "d", "e", "f")
+    val full = (for (i <- nodes.indices; j <- nodes.indices if i < j)
+      yield (nodes(i), nodes(j))).toSet
+    assert(Closure.transitive(chain).as[(String, String)].collect().toSet == full)
+  }
+
   test("below() is reflexive at the top") {
     val edges = Seq(("a", "b"), ("b", "c")).toDF("sub", "sup")
     assert(Closure.below(edges, "c").as[String].collect().toSet == Set("a", "b", "c"))
