@@ -4,7 +4,11 @@ import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy, VertexId}
 import org.apache.spark.graphx.lib.ShortestPaths
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 import graft.functions.FastHash.md5 // shadows functions.md5 → Md5Fast (r19)
 
 /** GraphX analytics over the RDF edge set — the north star's "GraphX
@@ -39,6 +43,68 @@ object Analytics {
     graft.Checkpoints.trackedWithHandle(df)
 
   private def checkpointTracked(df: DataFrame): DataFrame = ckpt(df)._1
+
+  private def persisted[T](rdd: RDD[T]): RDD[T] =
+    track(rdd.persist(StorageLevel.MEMORY_AND_DISK))(_.unpersist(blocking = false))
+
+  /** The vertex-keyed partitioner a superstep loop holds its adjacency,
+    * its vertex state and its messages under. With all three
+    * co-partitioned, every state⋈adjacency join is narrow and a round's
+    * only shuffle is the message exchange.
+    */
+  private def vertexPartitioner(edges: DataFrame): HashPartitioner =
+    new HashPartitioner(edges.sparkSession.sessionState.conf.numShufflePartitions)
+
+  /** A (src, dst) edge frame's vertex keys as Long ids, so the superstep
+    * loops shuffle only primitives (Spark picks Kryo for those).
+    * Integral keys are their own ids, so id order is key order. String
+    * keys get xxhash64 ids, as [[build]] mints them, and [[frame]] joins
+    * each id back to its string. One `.rdd` pass over the edge frame
+    * feeds both the id pairs and the names.
+    */
+  private final class VertexIds(edges: DataFrame, part: HashPartitioner) {
+    val keyType: DataType = edges.schema("src").dataType
+    val integral: Boolean = keyType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case StringType => false
+      case t => throw new IllegalArgumentException(
+        s"vertex keys must be integral or string, not $t")
+    }
+    private val rows =
+      if (integral) edges.select(col("src").cast("long"), col("dst").cast("long")).rdd
+      else edges.select(xxhash64(col("src")), xxhash64(col("dst")),
+        col("src"), col("dst")).rdd
+    val pairs: RDD[(Long, Long)] = rows.map(r => (r.getLong(0), r.getLong(1)))
+
+    /** Neighbour lists keyed by vertex under `part`: out-neighbours, or
+      * both directions when `undirected`. Every edge row is one entry,
+      * so duplicate edges keep counting. A vertex with no entries
+      * still gets an (empty) list: every endpoint is a vertex.
+      */
+    def adjacency(undirected: Boolean): RDD[(Long, Array[Long])] = {
+      val none = Array.emptyLongArray
+      persisted(pairs.flatMap { case (s, d) =>
+        Iterator(s -> Array(d), d -> (if (undirected) Array(s) else none))
+      }.groupByKey(part).mapValues(_.flatten.toArray))
+    }
+
+    /** `state` (partitioned by `part`) as a (key, value) frame, each id
+      * replaced by its vertex key in the input's type.
+      */
+    def frame(state: RDD[(Long, Long)], key: String, value: String): DataFrame = {
+      val spark = edges.sparkSession
+      if (integral)
+        spark.createDataFrame(state).toDF(key, value)
+          .withColumn(key, col(key).cast(keyType))
+      else {
+        val names = rows.flatMap(r => Iterator(
+          r.getLong(0) -> r.getString(2), r.getLong(1) -> r.getString(3)))
+          .reduceByKey(part, (a, _) => a)
+        spark.createDataFrame(state.join(names).values.map(_.swap))
+          .toDF(key, value)
+      }
+    }
+  }
 
   /** Unpersist everything graph queries cached. Long-lived sessions
     * call this between graph workloads so Pregel's MEMORY_AND_DISK
@@ -160,57 +226,59 @@ object Analytics {
   @volatile var lastKCoreRounds: Int = 0
 
   /** K-core peeling over the undirected edge set: synchronous rounds
-    * of "drop every node with degree < k (and its edges)" until the
-    * edge count stops shrinking — peeling only removes edges, so an
-    * unchanged count IS the fixpoint, and the loop needs no bound
-    * tuned to the graph's depth (a fixed round count silently returns
-    * a superset on a deeper graph). `maxRounds` is a safety valve and
-    * a way for tests to observe the bounded intermediate states; the
-    * rounds actually run land in [[lastKCoreRounds]]. A DataFrame
-    * loop, not Pregel: each round is one partial-aggregated degree
-    * count + two semi-joins, localCheckpoint()ed so the plan stays
-    * round-sized — the iterative-DataFrame idiom that scales with AQE
-    * picking the join strategy per round as the graph shrinks. The
-    * convergence count() per round is free: it reads the
-    * just-materialized checkpoint.
+    * of "drop every node with degree < k (and its edges)" until a round
+    * drops nothing. Peeling only removes edges, so a round with no node
+    * under k IS the fixpoint, and the loop needs no bound tuned to the
+    * graph's depth (a fixed round count silently returns a superset on
+    * a deeper graph). `maxRounds` is a safety valve and a way for tests
+    * to observe the bounded intermediate states; the rounds actually
+    * run, the final no-op round included, land in [[lastKCoreRounds]].
+    *
+    * Precondition: `edges` is distinct and canonical (one row per
+    * undirected edge); each row counts once toward both endpoints'
+    * degrees. Keys are integral or string.
+    *
+    * Scale shape: a co-partitioned superstep loop. The neighbour lists
+    * are keyed by vertex under one hash partitioner. A round sends each
+    * dropped vertex's id to its neighbours in one shuffle, and each
+    * survivor removes the dropped ids from its own list, a narrow
+    * join. Convergence needs a driver decision per round, so each round
+    * is one job: it materializes the last peel and counts the live and
+    * the doomed vertices.
     */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 10000): DataFrame = {
-    // precondition: `edges` is DISTINCT and canonical (one row per
-    // undirected edge, src < dst) — then the doubled relation is
-    // distinct by construction and no dedup shuffle is needed. Peel
-    // on the caller's key type: numeric ids shuffle/join far cheaper
-    // than URI strings, so callers should map to strings AFTER.
-    // hash-partition the doubled relation by src ONCE (r19): the
-    // per-round degree fold is keyed src, so it then aggregates
-    // WITHOUT an exchange; the semi-joins' keep side is vertex-scale
-    // (AQE broadcasts it), so the surviving-edge projection keeps the
-    // src partitioning and the checkpoint PRESERVES it into the next
-    // round — the peel loop's edge relation never re-shuffles.
-    // Explicit count (REPARTITION_BY_NUM) so AQE can't coalesce the
-    // partitioning out of alignment with later rounds.
-    var (cur, curRdd) = ckpt(edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
-        col("src")))
-    var prev = cur.count()
+    val part = vertexPartitioner(edges)
+    val ids = new VertexIds(edges, part)
+    var cur = ids.adjacency(undirected = true)
+    def census(adj: RDD[(Long, Array[Long])]): (Long, Long) =
+      adj.aggregate((0L, 0L))(
+        (n, v) => (n._1 + 1, n._2 + (if (v._2.length < k) 1 else 0)),
+        (a, b) => (a._1 + b._1, a._2 + b._2))
+    val (live, doomed0) = census(cur)
+    var doomed = doomed0
     var rounds = 0
-    var converged = prev == 0L
+    var converged = live == 0L
     while (!converged && rounds < maxRounds) {
-      val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src"))
-      val (next, nextRdd) = ckpt(cur
-        .join(keep, Seq("src"), "left_semi")
-        .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")))
-      val n = next.count()
       rounds += 1
-      converged = n == prev
-      prev = n
-      curRdd.unpersist(blocking = false)
-      cur = next; curRdd = nextRdd
+      if (doomed == 0L) converged = true
+      else {
+        val dropped = cur.flatMap { case (v, ns) =>
+          if (ns.length < k) ns.iterator.map(_ -> v) else Iterator.empty
+        }.groupByKey(part)
+        // the census materializes the local checkpoint, so each state's
+        // lineage stays one round deep however many rounds run
+        val next = persisted(cur.leftOuterJoin(dropped).mapValues {
+          case (ns, _) if ns.length < k => Array.emptyLongArray
+          case (ns, None) => ns
+          case (ns, Some(gone)) => val g = gone.toSet; ns.filterNot(g)
+        }.filter(_._2.nonEmpty)).localCheckpoint()
+        doomed = census(next)._2
+        cur.unpersist(blocking = false)
+        cur = next
+      }
     }
     lastKCoreRounds = rounds
-    cur.select(col("src").as("uri")).distinct()
+    ids.frame(cur.mapValues(_.length.toLong), "uri", "deg").select(col("uri"))
   }
 
   /** Strongly connected components over NUMERIC-id directed edges
@@ -372,38 +440,63 @@ object Analytics {
     * partitioning, so the oracle can replay the rounds in SQL.
     * Fixed rounds are the semantics here (LPA has no monotone
     * fixpoint — labels can oscillate — so "run to convergence" is not
-    * well-defined the way k-core's peel is). Each round is one join +
-    * two partial-agg shuffles keyed by vertex; the max-struct pick
-    * avoids a window. Returns (v, label).
+    * well-defined the way k-core's peel is). Each edge row counts once
+    * in each direction. Returns (v, label).
+    *
+    * Scale shape: a co-partitioned superstep loop. The neighbour lists
+    * and the labels are keyed by vertex under one hash partitioner, so
+    * a round joins them narrowly. Each partition counts the labels it
+    * sends per receiver, and the round's one shuffle carries those
+    * counts to the receivers, which sum them and pick the winner. The
+    * rounds chain lazily: all of them run inside the job that reads
+    * the result.
     */
   def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
-    // hash-partition the (invariant) adjacency by the per-round join
-    // key BEFORE checkpointing: LogicalRDD preserves the partitioning,
-    // so every round's und⋈lab join moves only the vertex-scale label
-    // table — the edge relation never re-shuffles (r19, guide §2.4
-    // "two operations keyed the same way share one exchange"; the
-    // GraphX posture — edges stay put, labels move — in DataFrame form)
-    val und = checkpointTracked(edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      // explicit count (REPARTITION_BY_NUM): AQE never coalesces it,
-      // so the checkpointed partitioning provably matches the
-      // per-round join's requirement
-      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
-        col("dst")))
-    var (lab, labRdd) = ckpt(und.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("label")))
-    for (_ <- 1 to rounds) {
-      val counts = und
-        .join(lab.select(col("v").as("dst"), col("label")), Seq("dst"))
-        .groupBy(col("src"), col("label")).agg(count(lit(1)).as("n"))
-      val next = counts.groupBy(col("src"))
-        .agg(max(struct(col("n"), (-col("label")).as("neg"))).as("best"))
-        .select(col("src").as("v"), (-col("best.neg")).as("label"))
-      val (n2, r2) = ckpt(next)
-      labRdd.unpersist(blocking = false)
-      lab = n2; labRdd = r2
+    val part = vertexPartitioner(edges)
+    val ids = new VertexIds(edges, part)
+    require(ids.integral,
+      s"labelPropagation needs integral vertex keys, not ${ids.keyType}")
+    val adj = ids.adjacency(undirected = true)
+    var label: RDD[(Long, Long)] =
+      adj.mapPartitions(_.map { case (v, _) => v -> v }, preservesPartitioning = true)
+    for (_ <- 1 to rounds)
+      label = adj.join(label).mapPartitions(tally)
+        .groupByKey(part).mapValues(mostFrequent)
+    ids.frame(label, "v", "label").withColumn("label", col("label").cast(ids.keyType))
+  }
+
+  /** One partition's label messages counted per receiver before the
+    * shuffle (a hand-rolled map-side combine that keeps the shuffled
+    * types primitive): (v, [l1, n1, l2, n2, ...]) per receiving vertex.
+    */
+  private def tally(senders: Iterator[(Long, (Array[Long], Long))]): Iterator[(Long, Array[Long])] = {
+    val byReceiver = mutable.LongMap.empty[mutable.LongMap[Long]]
+    senders.foreach { case (_, (ns, l)) =>
+      ns.foreach { v =>
+        val c = byReceiver.getOrElseUpdate(v, mutable.LongMap.empty[Long])
+        c(l) = c.getOrElse(l, 0L) + 1
+      }
     }
-    lab
+    byReceiver.iterator.map { case (v, c) =>
+      val a = new Array[Long](2 * c.size)
+      var i = 0
+      c.foreach { case (l, n) => a(i) = l; a(i + 1) = n; i += 2 }
+      v -> a
+    }
+  }
+
+  /** The label with the largest summed count over `tallies`, ties to
+    * the smallest label.
+    */
+  private def mostFrequent(tallies: Iterable[Array[Long]]): Long = {
+    val counts = mutable.LongMap.empty[Long]
+    tallies.foreach { a =>
+      var i = 0
+      while (i < a.length) { counts(a(i)) = counts.getOrElse(a(i), 0L) + a(i + 1); i += 2 }
+    }
+    counts.foldLeft((Long.MaxValue, -1L)) { case ((best, bestN), (l, n)) =>
+      if (n > bestN || (n == bestN && l < best)) (l, n) else (best, bestN)
+    }._1
   }
 
   /** Newman modularity of a vertex partition over a canonical
@@ -481,6 +574,8 @@ object Analytics {
     * on any engine and any partitioning (float PageRank depends on
     * summation order, which makes it unverifiable cross-engine).
     * Dangling mass is dropped, matching GraphX's staticPageRank.
+    * Every edge row is one share of its source's rank, so duplicate
+    * edges keep counting. Keys are integral or string.
     *
     * The damping multiply is computed as
     * `(m div 100)·85 + ((m mod 100)·85) div 100` — algebraically equal
@@ -488,46 +583,32 @@ object Analytics {
     * intermediate never exceeds 85·m/100, so hub vertices aggregating
     * billions of contributions stay within Long range.
     *
-    * Scale shape: each iteration is one shuffle join (edges ⋈ rank on
-    * src) + one aggregation keyed by dst + one left join back to the
-    * vertex set — the canonical distributed PageRank data flow. The
-    * edge list, vertex set, and out-degrees are localCheckpoint()ed
-    * once and reused every iteration, and each rank generation is
-    * checkpointed so the plan stays iteration-sized.
+    * Scale shape: a co-partitioned superstep loop (Pregelix's
+    * vertex⋈message step). The out-neighbour lists are keyed by vertex
+    * under one hash partitioner, built once and cached; the ranks are
+    * held under the same partitioner. A round joins ranks to lists
+    * narrowly, and its one shuffle sums the shares by receiving
+    * vertex. The rounds chain lazily: all of them run inside the job
+    * that reads the result.
     */
   def pageRank(spark: SparkSession, edges: DataFrame, iters: Int,
                scale: Long = 1000000000L): DataFrame = {
-    val e = checkpointTracked(edges.select(col("src"), col("dst")))
-    // vertex set partitioned by its join key: the per-iteration
-    // verts⋈msgs left join then lines up with the message
-    // aggregation's own hash partitioning — neither side re-shuffles
-    // inside the loop (r19, guide §2.4)
-    val verts = checkpointTracked(e.select(col("src").as("uri"))
-      .unionAll(e.select(col("dst").as("uri"))).distinct()
-      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
-        col("uri")))
-    // edge+outdeg relation partitioned by src: each iteration's
-    // withDeg⋈rank join moves only the vertex-scale rank table
-    val withDeg = checkpointTracked(e.join(
-      e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), Seq("src"))
-      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
-        col("src")))
-    var rank = verts.select(col("uri"), lit(scale).as("rank"))
-    var rankRdd: org.apache.spark.rdd.RDD[_] = null
+    val part = vertexPartitioner(edges)
+    val ids = new VertexIds(edges, part)
+    val out = ids.adjacency(undirected = false)
+    val reset = scale * 15 / 100
+    var rank: RDD[(Long, Long)] = out.mapValues(_ => scale)
     for (_ <- 1 to iters) {
-      val msgs = withDeg
-        .join(rank.select(col("uri").as("src"), col("rank")), Seq("src"))
-        .select(col("dst").as("uri"), expr("rank div outdeg").as("c"))
-        .groupBy(col("uri")).agg(sum(col("c")).as("msum"))
-      val (next, nextRdd) = ckpt(verts.join(msgs, Seq("uri"), "left_outer")
-        .select(col("uri"),
-          (lit(scale * 15 / 100) +
-            expr("(coalesce(msum, 0L) div 100) * 85 " +
-              "+ ((coalesce(msum, 0L) % 100) * 85) div 100")).as("rank")))
-      if (rankRdd != null) rankRdd.unpersist(blocking = false)
-      rank = next; rankRdd = nextRdd
+      val msum = out.join(rank).flatMap { case (_, (ns, r)) =>
+        val share = if (ns.isEmpty) 0L else r / ns.length
+        ns.iterator.map(_ -> share)
+      }.reduceByKey(part, _ + _)
+      rank = out.leftOuterJoin(msum).mapValues { case (_, m) =>
+        val s = m.getOrElse(0L)
+        reset + (s / 100) * 85 + ((s % 100) * 85) / 100
+      }
     }
-    rank
+    ids.frame(rank, "uri", "rank")
   }
 
   /** Min hop count from any vertex of `sources` (undirected). The

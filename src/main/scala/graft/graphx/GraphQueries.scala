@@ -237,9 +237,9 @@ object GraphQueries {
           .as("r"))
     },
     "graph_kcore" -> { (s, dir) =>
-      // kCore's checkpoint loop runs EAGERLY during construction, so
-      // the observed round count can be captured here — keyed to THIS
-      // query, immune to other kCore callers in the same JVM
+      // kCore's per-round census jobs run EAGERLY during construction,
+      // so the observed round count can be captured here — keyed to
+      // THIS query, immune to other kCore callers in the same JVM
       val res = Analytics.kCore(coOrderPartEdgeKeys(s, dir), k = 3)
       kcoreObservedRounds = Analytics.lastKCoreRounds
       res.select(concat(lit("part:"), col("uri")).as("uri"))

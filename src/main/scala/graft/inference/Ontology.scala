@@ -69,8 +69,28 @@ object Ontology {
   def subClassDf(spark: SparkSession): DataFrame =
     spark.createDataFrame(subClassOf).toDF("sub", "sup")
 
-  def subPropertyDf(spark: SparkSession): DataFrame =
-    spark.createDataFrame(subPropertyOf).toDF("sub", "sup")
+  /** `top` and every term below it in a (sub, sup) hierarchy, computed
+    * on the driver: the hierarchies here are a dozen compile-time
+    * edges, so a Spark closure loop would cost a job per round for
+    * nothing. Data-scale hierarchies go through [[Closure.below]].
+    */
+  def below(hierarchy: Seq[(String, String)], top: String): Set[String] = {
+    var reached = Set(top)
+    var frontier = Set(top)
+    while (frontier.nonEmpty) {
+      frontier = hierarchy.collect { case (sub, sup) if frontier(sup) => sub }
+        .toSet -- reached
+      reached ++= frontier
+    }
+    reached
+  }
+
+  /** [[below]] as a one-column ("c") frame, ready to broadcast. */
+  def belowDf(spark: SparkSession, hierarchy: Seq[(String, String)],
+              top: String): DataFrame = {
+    import spark.implicits._
+    below(hierarchy, top).toSeq.sorted.toDF("c")
+  }
 
   /** The ontology as triples (LiteOntologyImporter's input shape;
     * reference: pidb-rdf-import/src/main/java/semantics/LiteOntologyImporter.java).

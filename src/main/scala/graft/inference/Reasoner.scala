@@ -18,7 +18,7 @@ object Reasoner {
 
   /** Nodes carrying `label` directly or via any subclass of it. */
   def nodesWithLabel(spark: SparkSession, triples: DataFrame, label: String): DataFrame = {
-    val labels = broadcast(Closure.below(Ontology.subClassDf(spark), label))
+    val labels = broadcast(Ontology.belowDf(spark, Ontology.subClassOf, label))
     typeTriples(triples)
       .join(labels, col("o") === col("c"), "left_semi")
       .select(col("s").as("uri"))
@@ -103,7 +103,7 @@ object Reasoner {
 
   /** Edges whose relation is `rel` or any subproperty of it. */
   def rels(spark: SparkSession, edges: DataFrame, rel: String): DataFrame = {
-    val props = broadcast(Closure.below(Ontology.subPropertyDf(spark), rel))
+    val props = broadcast(Ontology.belowDf(spark, Ontology.subPropertyOf, rel))
     edges.join(props, col("rel") === col("c"), "left_semi")
       .select(col("src"), col("rel"), col("dst"))
   }
@@ -149,7 +149,7 @@ object Reasoner {
 
   /** For every typed node: does it carry `label` (incl. implied)? */
   def hasLabel(spark: SparkSession, triples: DataFrame, label: String): DataFrame = {
-    val labels = Closure.below(Ontology.subClassDf(spark), label)
+    val labels = Ontology.belowDf(spark, Ontology.subClassOf, label)
       .withColumn("__hit", lit(true))
     typeTriples(triples)
       .join(broadcast(labels), col("o") === col("c"), "left_outer")

@@ -203,7 +203,8 @@ object Harness {
   /** Per-stage wall time, tasks and input/shuffle volumes of one warm
     * run of `key`: the Spark UI's "which stage is slow" answer, as text.
     * The stage count is checked against the status tracker's count of
-    * stages submitted by the run's jobs.
+    * stages submitted by the run's jobs; the job count comes from the
+    * tracker too.
     */
   private def profile(key: String, sfDir: String, warmups: Int): Unit =
     withSession { spark =>
@@ -240,11 +241,11 @@ object Harness {
       sc.removeSparkListener(listener)
       val seen = stages.synchronized(stages.toList)
       val st = sc.statusTracker
-      val tracked = st.getJobIdsForGroup(group).toSeq.flatMap(st.getJobInfo)
-        .flatMap(_.stageIds).distinct
+      val jobs = st.getJobIdsForGroup(group).toSeq.flatMap(st.getJobInfo)
+      val tracked = jobs.flatMap(_.stageIds).distinct
         .count(id => st.getStageInfo(id).exists(_.submissionTime > 0))
       println(f"[profile] $key total=$sec%.3f s, ${seen.size} stages " +
-        s"(statusTracker: $tracked)")
+        s"(statusTracker: $tracked), ${jobs.size} jobs")
       seen.sortBy(-_.ms).take(25).foreach { s =>
         println(f"[profile] ${s.ms}%7d ms  ${s.tasks}%4d tasks  " +
           f"in=${s.inMb}%8.1f MB  sr=${s.srMb}%8.1f MB  sw=${s.swMb}%8.1f MB  " +

@@ -248,12 +248,89 @@ class AnalyticsSpec extends AnyFunSuite {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     Analytics.connectedComponents(spark, edges).collect()
     Analytics.pageRank(spark, edges, 3).collect()
+    Analytics.labelPropagation(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
+      .toDF("src", "dst"), rounds = 2).collect()
+    Analytics.kCore(edges, 2).collect()
     assert(spark.sparkContext.getPersistentRDDs.keySet.size > before.size)
     Analytics.releaseCaches()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     val detail = leaked.map(id =>
       s"$id:${spark.sparkContext.getPersistentRDDs(id)}")
     assert(leaked.isEmpty, s"leaked RDDs: $detail")
+  }
+
+  test("pagerank, label propagation and k-core ignore partition counts") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    // 40 pseudo-random edges over 16 vertices, plus one duplicate edge
+    // and one sink-only vertex for pagerank; the k = 3 peel takes more
+    // than one round
+    val rnd = new scala.util.Random(7)
+    val pairs = Seq.fill(40)((rnd.nextInt(16).toLong, rnd.nextInt(16).toLong))
+      .filter { case (a, b) => a != b }
+    val und = pairs.map { case (a, b) => (a min b, a max b) }.distinct
+      .toDF("src", "dst")
+    val directed = (pairs ++ Seq(pairs.head, (3L, 99L))).toDF("src", "dst")
+      .select(concat(lit("v"), col("src")).as("src"),
+        concat(lit("v"), col("dst")).as("dst"))
+    def answers(widen: DataFrame => DataFrame) = (
+      Analytics.pageRank(spark, widen(directed), 10)
+        .as[(String, Long)].collect().toSet,
+      Analytics.labelPropagation(widen(und), rounds = 4)
+        .as[(Long, Long)].collect().toSet,
+      Analytics.kCore(widen(und), 3).as[Long].collect().toSet,
+      Analytics.lastKCoreRounds)
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try {
+      val runs = for {
+        n <- Seq("1", "4")
+        widen <- Seq[DataFrame => DataFrame](identity, _.repartition(16))
+      } yield {
+        spark.conf.set(key, n)
+        answers(widen)
+      }
+      val nVerts = (pairs.flatMap(p => Seq(p._1, p._2)) :+ 99L).distinct.size
+      assert(runs.head._1.size == nVerts && runs.head._3.nonEmpty &&
+        runs.head._4 > 1)
+      assert(runs.forall(_ == runs.head))
+    } finally {
+      spark.conf.set(key, saved)
+      Analytics.releaseCaches()
+    }
+  }
+
+  test("pagerank runs each superstep as one stage of one job") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val iters = 10
+    // the edge-id build, the name build and the result stage
+    val c = 3
+    val group = "pagerank-stage-budget"
+    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val done = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(ours.add(_))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        done.add(e.stageInfo.stageId)
+    }
+    org.apache.spark.ListenerBusDrain.waitUntilEmpty(sc, 10000)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "stage budget")
+      Analytics.pageRank(spark, edges, iters).collect()
+    } finally {
+      sc.clearJobGroup()
+      assert(org.apache.spark.ListenerBusDrain.waitUntilEmpty(sc, 10000))
+      sc.removeSparkListener(listener)
+      Analytics.releaseCaches()
+    }
+    ours.retainAll(done)
+    assert(ours.size > iters && ours.size <= iters + c,
+      s"${ours.size} stages for $iters supersteps")
   }
 
   test("walk sample is deterministic and follows real edges") {

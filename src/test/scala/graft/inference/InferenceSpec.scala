@@ -31,6 +31,15 @@ class InferenceSpec extends AnyFunSuite {
     val edges = Seq(("a", "b"), ("b", "c")).toDF("sub", "sup")
     assert(Closure.below(edges, "c").as[String].collect().toSet == Set("a", "b", "c"))
     assert(Closure.below(edges, "b").as[String].collect().toSet == Set("a", "b"))
+    // the driver-side closure the reasoners broadcast agrees with the
+    // Spark one on both shipped hierarchies, at every term
+    for (h <- Seq(Ontology.subClassOf, Ontology.subPropertyOf)) {
+      val closure = Closure.transitive(h.toDF("sub", "sup"))
+        .as[(String, String)].collect()
+      for (top <- h.flatMap(e => Seq(e._1, e._2)).distinct)
+        assert(Ontology.below(h, top) ==
+          closure.collect { case (sub, `top`) => sub }.toSet + top, top)
+    }
   }
 
   test("importLite types meta-nodes and falls back to local names") {
